@@ -95,9 +95,14 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
           val mm = modeled.agg(
             min(col("sale_date").cast("date")),
             max(col("sale_date").cast("date"))).first()
-          val dd = Model.dateDim(spark, mm.getDate(0), mm.getDate(1))
-          Load.fullRefresh(dd, s"$warehouseDir/date_dim", 1L)
-          (dd, dd.count())
+          val (lo, hi) = (mm.getDate(0), mm.getDate(1))
+          val dd = Model.dateDim(spark, lo, hi)
+          // one row per day of sequence(lo, hi) (none when the fact has
+          // no dates): the count is known without a job
+          val nDays = if (lo == null) 0L
+            else hi.toLocalDate.toEpochDay - lo.toLocalDate.toEpochDay + 1
+          Load.fullRefresh(dd, s"$warehouseDir/date_dim", nDays)
+          (dd, nDays)
         }
       }
 
@@ -105,7 +110,8 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
       val target = targetTable(table)
       stage(runId, "LOAD", nModeled) {
         Load.fullRefresh(modeled, s"$warehouseDir/$target", nModeled)
-        Load.validateLoaded(spark, s"$warehouseDir/$target", pk, nModeled)
+        Load.validateLoaded(spark, s"$warehouseDir/$target", modeled.schema,
+          pk, nModeled)
         (modeled, nModeled)
       }
 

@@ -101,15 +101,16 @@ object Extract {
   /** Full extract stage: precheck, read, then the reference's sanity
     * gates in its eager order (etl/extract.py:138-175):
     * schema match -> non-empty -> null-fraction -> full-row dups.
+    * The schema match is metadata-only; the other three run as the ONE
+    * fused aggregation of [[Gates.requireSourceGates]] (a full scan, so
+    * FAILFAST still surfaces malformed rows), with the exact dup
+    * confirm pass only when hash candidates exist.
     * Returns (frame, rowCount). */
   def extractCsv(spark: SparkSession, path: String, schema: StructType,
                  expectedColumns: Seq[String]): (DataFrame, Long) = {
     precheckSource(path)
     val df = readCsv(spark, path, schema)
     Gates.requireSchemaMatch(df, expectedColumns)
-    val n = Gates.requireNonEmpty(df)
-    Gates.requireMaxNullPct(df)
-    Gates.requireNoFullRowDups(df)
-    (df, n)
+    (df, Gates.requireSourceGates(df))
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Warehouse sink (etl/load.py re-expressed Spark-first).
   *
@@ -30,26 +30,31 @@ object Load {
     * files are right-sized (~100k rows per file, capped at 10k files)
     * instead of inheriting the upstream shuffle's partition count —
     * small dims become one file, large facts keep write parallelism.
+    * The write is the only job: `coalesce` never raises a partition
+    * count, so it applies unconditionally instead of after a
+    * partition-count probe (which, under AQE, would execute the
+    * plan's query stages once before the write runs them again).
     * Periodic [[compact]] (1M-row default) consolidates further once a
     * table stops changing. */
   def fullRefresh(df: DataFrame, path: String, nRows: Long = -1L): Unit = {
     val sized =
       if (nRows < 0) df
-      else {
-        val parts = math.max(1L, math.min(nRows / 100000L + 1, 10000L)).toInt
-        if (parts < df.rdd.getNumPartitions) df.coalesce(parts) else df
-      }
+      else df.coalesce(math.max(1L, math.min(nRows / 100000L + 1, 10000L)).toInt)
     sized.write.mode("overwrite").parquet(path)
   }
 
   /** Post-load validation (etl/load.py:144-210): loaded count equals
     * source count, zero NULL PKs, zero duplicate PKs — run against the
-    * loaded table, in the reference's eager order. */
-  def validateLoaded(spark: SparkSession, path: String, pk: Seq[String],
-                     expectedCount: Long): Unit = {
-    val loaded = spark.read.parquet(path)
-    // one pass: row count + NULL-PK count + dup-PK groups (a single
-    // groupBy(pk) job; see Gates.pkIntegrityStats)
+    * loaded table, in the reference's eager order. `schema` is the
+    * schema of the frame that was written: the table is read back with
+    * it (no footer-reading schema-inference job) and column pruning
+    * reads only the PK columns, so the check is the ONE groupBy(pk)
+    * job of [[Gates.pkIntegrityStats]]. A PK column missing from the
+    * files reads as NULL and fails the NULL-PK gate; one of the wrong
+    * type fails the read. */
+  def validateLoaded(spark: SparkSession, path: String, schema: StructType,
+                     pk: Seq[String], expectedCount: Long): Unit = {
+    val loaded = spark.read.schema(schema).parquet(path)
     val (n, nNullPk, nDupPk) = Gates.pkIntegrityStats(loaded, pk)
     if (n != expectedCount)
       throw new DataQualityException(
@@ -120,7 +125,7 @@ object Load {
                         pk: Seq[String], expectedCount: Long): Unit = {
     val staging = path + "_staging"
     fullRefresh(df, staging, expectedCount)
-    try validateLoaded(spark, staging, pk, expectedCount)
+    try validateLoaded(spark, staging, df.schema, pk, expectedCount)
     catch {
       case e: Throwable =>
         org.apache.hadoop.fs.FileSystem

@@ -19,21 +19,23 @@ object Merge {
     * column itself is not part of the output).
     *
     * Shape: ONE anti-join of base against the update keys plus a
-    * union. With updates << base (the overwhelmingly common case) a
-    * bounded row probe (`limit(N+1).count()`, an early-stopping
-    * narrow job) confirms the update set is small and the anti-join
-    * broadcasts the update keys — the base never shuffles, the
-    * copy-on-write MERGE plan. Above the probe threshold NO hint is
-    * applied and the planner/AQE picks the join — a huge update set
-    * degrades gracefully to a shuffled anti-join instead of being
-    * force-collected onto the driver, never to a full-table window
-    * or driver loop.
+    * union. With updates << base (the overwhelmingly common case) the
+    * update row count confirms the update set is small and the
+    * anti-join broadcasts the update keys — the base never shuffles,
+    * the copy-on-write MERGE plan. Above `broadcastKeyRowLimit` rows NO
+    * hint is applied and the planner/AQE picks the join — a huge
+    * update set degrades gracefully to a shuffled anti-join instead of
+    * being force-collected onto the driver, never to a full-table
+    * window or driver loop.
     *
     * Update keys must be unique or "latest wins" is ambiguous;
-    * `checkDuplicates` enforces it with an eager probe job (one
-    * shuffle of the update set) — callers that guarantee uniqueness
-    * by construction (Update-mode streaming aggregation output) pass
-    * false and skip the job. */
+    * `checkDuplicates` enforces it with ONE eager probe,
+    * [[Gates.pkIntegrityStats]] (one shuffle of the update set): its
+    * duplicate-group count feeds the uniqueness check and its row
+    * count decides the broadcast. Callers that guarantee uniqueness by
+    * construction (Update-mode streaming aggregation output) pass
+    * false; they pay only a bounded row probe (`limit(N+1).count()`,
+    * an early-stopping narrow job) for the broadcast decision. */
   def mergeUpsert(base: DataFrame, updates: DataFrame, keys: Seq[String],
                   deleteFlag: Option[String] = None,
                   checkDuplicates: Boolean = true,
@@ -42,16 +44,16 @@ object Merge {
     require(outCols.forall(updates.columns.contains),
       s"updates must carry every base column; missing " +
         s"${outCols.filterNot(updates.columns.contains).toSeq}")
-    if (checkDuplicates) {
-      val dupKeys = updates.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1).count()
-      require(dupKeys == 0,
-        s"update set has duplicate keys $keys — latest-wins is ambiguous; " +
-          "dedupKeepFirst the updates on a version order first")
-    }
     val updKeys = updates.select(keys.map(col): _*)
-    val smallEnough =
-      updKeys.limit(broadcastKeyRowLimit + 1).count() <= broadcastKeyRowLimit.toLong
+    val nUpdates =
+      if (checkDuplicates) {
+        val (n, _, dupKeys) = Gates.pkIntegrityStats(updates, keys)
+        require(dupKeys == 0,
+          s"update set has duplicate keys $keys — latest-wins is ambiguous; " +
+            "dedupKeepFirst the updates on a version order first")
+        n
+      } else updKeys.limit(broadcastKeyRowLimit + 1).count()
+    val smallEnough = nUpdates <= broadcastKeyRowLimit.toLong
     val probed = if (smallEnough) broadcast(updKeys) else updKeys
     val kept = base.join(probed, keys, "left_anti")
       .select(outCols.map(col): _*)

@@ -24,7 +24,6 @@ class AnnServingPathSpec extends SparkSpec {
     // suites run concurrently in one JVM — count ONLY jobs submitted
     // from this thread (job groups are thread-local), so a sibling
     // suite's jobs can never pollute the zero-job assertion
-    val gid = s"ann-serving-probe-${System.nanoTime()}"
     // a construction-time job would originate in the serving code
     // path — its action call site names one of these files. The
     // call-site filter matters because Spark's shared
@@ -36,28 +35,9 @@ class AnnServingPathSpec extends SparkSpec {
     val servingSites = Seq("PairStage.scala", "Tables.scala",
       "Similarity.scala", "ExtQueriesSimilarity.scala",
       "Materialize.scala", "AnnServingPathSpec.scala")
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-          gid == js.properties.getProperty("spark.jobGroup.id") &&
-          js.stageInfos.exists(si =>
-            servingSites.exists(si.name.contains))) {
-          n.incrementAndGet(); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(gid, "serving-path construction probe")
-    try {
-      val r = f
-      Thread.sleep(1000) // listener bus is async
-      (r, n.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (r, jobs) = graft.JobLog.during(spark)(f)
+    (r, jobs.count(j => (j.site +: j.stageNames)
+      .exists(n => servingSites.exists(n.contains))))
   }
 
   private def scanPaths(df: DataFrame): Seq[String] =

@@ -25,35 +25,16 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   /** AnnServingPathSpec's probe, widened to the store's call sites:
-    * count only jobs from this thread's job group whose stage call
-    * sites name the staging/serving code path. */
+    * count only jobs from this thread's job group whose call site or
+    * stage call sites name the staging/serving code path. */
   private def jobsDuring[A](f: => A): (A, Int) = {
-    val gid = s"store-probe-${System.nanoTime()}"
     val sites = Seq("PairStage.scala", "ArtifactStore.scala",
       "Tables.scala", "Similarity.scala", "Dedup.scala",
       "ExtQueriesSimilarity.scala", "ExtQueriesDedup.scala",
       "Materialize.scala", "ArtifactStoreSpec.scala")
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-          gid == js.properties.getProperty("spark.jobGroup.id") &&
-          js.stageInfos.exists(si => sites.exists(si.name.contains))) {
-          n.incrementAndGet(); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(gid, "artifact-store attach probe")
-    try {
-      val r = f
-      Thread.sleep(1000) // listener bus is async
-      (r, n.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (r, jobs) = graft.JobLog.during(spark)(f)
+    (r, jobs.count(j => (j.site +: j.stageNames)
+      .exists(n => sites.exists(n.contains))))
   }
 
   private def serving(s: SparkSession, name: String): DataFrame =

@@ -52,17 +52,20 @@ class CleanGatesSpec extends SparkSpec {
 
   test("gates: empty source fails") {
     val df = Seq(1).toDF("a").filter(col("a") > 1)
-    assertThrows[DataQualityException] { Gates.requireNonEmpty(df) }
+    val e = intercept[DataQualityException] { Gates.requireSourceGates(df) }
+    assert(e.getMessage.contains("source is empty"))
   }
 
   test("gates: null fraction above threshold fails") {
-    val df = (1 to 100).map(i => if (i <= 96) None else Some(i))
-      .toDF("mostly_null")
-    assertThrows[DataQualityException] { Gates.requireMaxNullPct(df) }
+    // distinct ids: the rows sharing a NULL must not be full-row dups
+    val df = (1 to 100).map(i => (i, if (i <= 96) None else Some(i)))
+      .toDF("id", "mostly_null")
+    val e = intercept[DataQualityException] { Gates.requireSourceGates(df) }
+    assert(e.getMessage.contains("mostly_null=96.0%"), e.getMessage)
     // 95% exactly passes (gate is strict >)
-    val ok = (1 to 100).map(i => if (i <= 95) None else Some(i))
-      .toDF("mostly_null")
-    Gates.requireMaxNullPct(ok)
+    val ok = (1 to 100).map(i => (i, if (i <= 95) None else Some(i)))
+      .toDF("id", "mostly_null")
+    assert(Gates.requireSourceGates(ok) == 100L)
   }
 
   test("gates: full-row duplicates fail, near-duplicates pass") {

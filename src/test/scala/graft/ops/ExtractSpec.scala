@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
 
 class ExtractSpec extends SparkSpec {
@@ -96,5 +98,62 @@ class ExtractSpec extends SparkSpec {
     Extract.precheckSource(file(0xE0, 0xA0)) // valid 3-byte prefix
     Extract.precheckSource(file(0xED, 0x9F)) // valid (below surrogates)
     Extract.precheckSource(file(0xF4, 0x8F, 0xBF)) // valid 4-byte prefix
+  }
+
+  // ---- extractCsv: the sanity gates after the read ----
+
+  private val idV = StructType(Seq(StructField("id", LongType),
+    StructField("v", StringType)))
+
+  /** A headered `id,v` CSV; `v` is empty (NULL) on the first `nullV`
+    * of `n` rows. */
+  private def idVCsv(name: String, n: Int, nullV: Int): String =
+    tmpFile(name, ("id,v\n" + (1 to n).map(i =>
+      if (i <= nullV) s"$i," else s"$i,x$i").mkString("\n")).getBytes("UTF-8"))
+
+  private def extract(path: String): Long =
+    Extract.extractCsv(spark, path, idV, Seq("id", "v"))._2
+
+  private def gateMessage(path: String): String =
+    intercept[DataQualityException](extract(path)).getMessage
+
+  test("extractCsv: an empty file and a header-only file raise 'source is empty'") {
+    assert(gateMessage(tmpFile("empty.csv", Array.emptyByteArray))
+      .contains("source is empty"))
+    assert(gateMessage(tmpFile("header.csv", "id,v\n".getBytes("UTF-8")))
+      .contains("source is empty"))
+  }
+
+  test("extractCsv: the NULL-percentage gate fires above 95% and not at it") {
+    val m = gateMessage(idVCsv("null96.csv", 100, 96))
+    assert(m.contains("columns exceed") && m.contains("v=96.0%"), m)
+    // exactly at the bound passes: 95 of 100, and 19 of 20 (where a
+    // mean-times-100 formulation and a sum-times-100-over-n one could
+    // round differently)
+    assert(extract(idVCsv("null95.csv", 100, 95)) == 100)
+    assert(extract(idVCsv("null95of20.csv", 20, 19)) == 20)
+  }
+
+  test("extractCsv: a full-row duplicate raises with a sample") {
+    val path = tmpFile("dup.csv", "id,v\n1,a\n2,b\n2,b\n3,c\n".getBytes("UTF-8"))
+    val m = gateMessage(path)
+    assert(m.contains("duplicate full rows, sample: [2,b,2]"), m)
+  }
+
+  test("extractCsv: a malformed row fails the read under FAILFAST") {
+    val path = tmpFile("malformed.csv",
+      "id,v\n1,a\nnot_a_number,b\n3,c\n".getBytes("UTF-8"))
+    val e = intercept[Exception](extract(path))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage).toLowerCase).mkString(" | ")
+    assert(chain.contains("malformed"), chain)
+  }
+
+  test("extractCsv: a clean file returns the frame and its row count") {
+    val path = idVCsv("clean.csv", 250, 10)
+    val (df, n) = Extract.extractCsv(spark, path, idV, Seq("id", "v"))
+    assert(n == 250)
+    assert(df.count() == 250)
+    assert(df.columns.toSeq == Seq("id", "v"))
   }
 }
